@@ -11,7 +11,10 @@ import org.apache.spark.sql.SparkSession
   *
   * `extract` is checkpoint-resumable: completed batches (those with a
   * _SUCCESS marker) are skipped on restart — rerunning after a kill
-  * resumes at the last committed batch (north_rule).
+  * resumes at the last committed batch (north_rule). It scans and
+  * shuffles the input once per run; each of the `numBatches` batches
+  * then extracts and commits its own share of that shuffle
+  * (`Pipeline.runBatched`).
   */
 object Main {
   def main(args: Array[String]): Unit = {

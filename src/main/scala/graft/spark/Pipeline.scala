@@ -1,10 +1,13 @@
 package graft.spark
 
 import graft.html.{ExtractConfig, Extractor}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.PartitionPruningRDD
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Extraction pipeline over the interleaved-document table.
   *
@@ -52,91 +55,100 @@ object Pipeline {
     out
   }
 
-  /** Length-aware salted repartition (SURVEY §4 custom-work table).
-    * Regular docs hash over `partitions` buckets; giant docs go to
-    * `giantBuckets` DEDICATED buckets so a partition never mixes giant
-    * and bulk docs, and at most ~(giants/giantBuckets) giants share a
-    * task. Runs BEFORE the parse so the expensive kernel is balanced,
-    * not the scan. Bucket ids are mapped through `murmurInverse` so the
-    * plain `repartition(n, col)` Tungsten shuffle places each bucket on
-    * its own partition deterministically (naive repartition would
-    * re-hash bucket ids and collide giant buckets into bulk ones). */
-  def saltedRepartition(df: DataFrame, cfg: Config): DataFrame = {
-    val n = cfg.partitions + cfg.giantBuckets
-    val inv = murmurInverse(n)
+  /** Length-aware salt (SURVEY §4 custom-work table): the bucket of each
+    * doc. Regular docs hash over `partitions` buckets; giant docs go to
+    * `giantBuckets` DEDICATED buckets numbered after them, so a partition
+    * never mixes giant and bulk docs and at most ~(giants/giantBuckets)
+    * giants share a task. */
+  private def saltBucket(cfg: Config): Column = {
+    val hash = xxhash64(col("doc_id"))
     val bytes = aggregate(col("spans"), lit(0L),
       (acc, s) => acc + coalesce(length(s.getField("text")).cast("long"), lit(0L)))
-    val bucket = when(bytes > cfg.giantThresholdBytes,
-        pmod(xxhash64(col("doc_id")), lit(cfg.giantBuckets)).cast("int") + cfg.partitions)
-      .otherwise(pmod(xxhash64(col("doc_id")), lit(cfg.partitions)).cast("int"))
-    val pkey = element_at(typedlit(inv.toSeq), bucket + 1)
-    df.withColumn("__graft_pkey", pkey)
+    when(bytes > cfg.giantThresholdBytes,
+        pmod(hash, lit(cfg.giantBuckets)).cast("int") + cfg.partitions)
+      .otherwise(pmod(hash, lit(cfg.partitions)).cast("int"))
+  }
+
+  /** Repartition into `n` partitions so that row `key` (an int in
+    * 0 until n) lands on partition `key` exactly. The key is mapped
+    * through `murmurInverse` so the plain `repartition(n, col)` Tungsten
+    * shuffle places it deterministically (naive repartition would
+    * re-hash the key and collide giant buckets into bulk ones). */
+  private def exactRepartition(df: DataFrame, key: Column, n: Int): DataFrame =
+    df.withColumn("__graft_pkey", element_at(typedlit(murmurInverse(n).toSeq), key + 1))
       .repartition(n, col("__graft_pkey"))
       .drop("__graft_pkey")
+
+  /** Salted repartition into `partitions + giantBuckets` partitions, one
+    * per `saltBucket`. Runs BEFORE the parse so the expensive kernel is
+    * balanced, not the scan. */
+  def saltedRepartition(df: DataFrame, cfg: Config): DataFrame =
+    exactRepartition(df, saltBucket(cfg), cfg.partitions + cfg.giantBuckets)
+
+  /** The per-partition kernel: extracts every doc of partition `pid` and
+    * pushes one MetricsRow for it into `acc` once the input is drained
+    * (north_rule lineage). Never throws per-doc: a doc over
+    * `maxDocBytes` or one whose parse fails non-fatally emits an
+    * empty-span row and counts into docs_failed (robustness, Changes:33);
+    * fatal errors (OOM, interrupts) propagate. */
+  private def extractPartition(it: Iterator[DocRow], cfg: Config, batchId: Int,
+                               pid: Int, acc: CollectionAccumulator[MetricsRow])
+      : Iterator[DocRow] = {
+    val extractCfg = cfg.extract
+    val maxBytes = cfg.maxDocBytes
+    new Iterator[DocRow] {
+      private val t0 = System.nanoTime()
+      private var docsIn = 0L
+      private var docsOk = 0L
+      private var docsFailed = 0L
+      private var spansOut = 0L
+      private var bytesIn = 0L
+      private var firstId: String = null
+      private var lastId: String = null
+      private var finalized = false
+
+      def hasNext: Boolean = {
+        val h = it.hasNext
+        if (!h && !finalized) {
+          finalized = true
+          acc.add(MetricsRow(batchId, pid, docsIn, docsOk, docsFailed,
+            spansOut, bytesIn, (System.nanoTime() - t0) / 1000000L,
+            if (firstId == null) "" else firstId,
+            if (lastId == null) "" else lastId))
+        }
+        h
+      }
+
+      def next(): DocRow = {
+        val doc = it.next()
+        docsIn += 1
+        if (firstId == null) firstId = doc.doc_id
+        lastId = doc.doc_id
+        val sz = DocKernel.docBytes(doc)
+        bytesIn += sz
+        val out =
+          if (sz > maxBytes) { docsFailed += 1; DocRow(doc.doc_id, Seq.empty) }
+          else try {
+            val r = DocKernel.extractDoc(doc, extractCfg)
+            docsOk += 1
+            r
+          } catch { case NonFatal(_) =>
+            docsFailed += 1
+            DocRow(doc.doc_id, Seq.empty)
+          }
+        spansOut += out.spans.length
+        out
+      }
+    }
   }
 
-  def saltedRepartitionTyped(ds: Dataset[DocRow], cfg: Config): Dataset[DocRow] = {
-    import ds.sparkSession.implicits._
-    saltedRepartition(ds.toDF(), cfg).as[DocRow]
-  }
-
-  /** The distributed kernel: Dataset[DocRow] → Dataset[DocRow] with
-    * per-partition metrics pushed into `acc` (one MetricsRow per
-    * partition — north_rule lineage). Never throws per-doc: failures
-    * emit an empty-span row and count into docs_failed (robustness,
-    * Changes:33). */
+  /** The distributed kernel: Dataset[DocRow] → Dataset[DocRow] with one
+    * MetricsRow per partition pushed into `acc` (`extractPartition`). */
   def extractDataset(ds: Dataset[DocRow], cfg: Config, batchId: Int,
                      acc: CollectionAccumulator[MetricsRow]): Dataset[DocRow] = {
     import ds.sparkSession.implicits._
-    val extractCfg = cfg.extract
-    val maxBytes = cfg.maxDocBytes
-    ds.mapPartitions { it =>
-      new Iterator[DocRow] {
-        private val pid = org.apache.spark.TaskContext.getPartitionId()
-        private val t0 = System.nanoTime()
-        private var docsIn = 0L
-        private var docsOk = 0L
-        private var docsFailed = 0L
-        private var spansOut = 0L
-        private var bytesIn = 0L
-        private var firstId: String = null
-        private var lastId: String = null
-        private var finalized = false
-
-        def hasNext: Boolean = {
-          val h = it.hasNext
-          if (!h && !finalized) {
-            finalized = true
-            acc.add(MetricsRow(batchId, pid, docsIn, docsOk, docsFailed,
-              spansOut, bytesIn, (System.nanoTime() - t0) / 1000000L,
-              if (firstId == null) "" else firstId,
-              if (lastId == null) "" else lastId))
-          }
-          h
-        }
-
-        def next(): DocRow = {
-          val doc = it.next()
-          docsIn += 1
-          if (firstId == null) firstId = doc.doc_id
-          lastId = doc.doc_id
-          val sz = DocKernel.docBytes(doc)
-          bytesIn += sz
-          val out =
-            if (sz > maxBytes) { docsFailed += 1; DocRow(doc.doc_id, Seq.empty) }
-            else try {
-              val r = DocKernel.extractDoc(doc, extractCfg)
-              docsOk += 1
-              r
-            } catch { case _: Throwable =>
-              docsFailed += 1
-              DocRow(doc.doc_id, Seq.empty)
-            }
-          spansOut += out.spans.length
-          out
-        }
-      }
-    }
+    ds.mapPartitions(it =>
+      extractPartition(it, cfg, batchId, TaskContext.getPartitionId(), acc))
   }
 
   /** Columnar fast path: the whole kernel as one native expression —
@@ -187,32 +199,39 @@ object Pipeline {
   }
 
   /** Batched, checkpoint-resumable run (north_rule). Batch membership is
-    * pmod(xxhash64(doc_id), numBatches) — on a production Iceberg table
-    * the input would be bucket-partitioned by the same key so each batch
-    * is partition-pruned at the scan (here, on raw parquet, each batch
-    * re-scans and filters; documented trade-off of the sandbox sink).
-    * A committed batch is skipped on restart. */
+    * pmod(xxhash64(doc_id), numBatches); a batch committed by an earlier
+    * run is skipped. The input is scanned and shuffled ONCE: the docs of
+    * pending batches go through one exchange keyed by
+    * `batch * n + saltBucket` (n = partitions + giantBuckets), so shuffle
+    * partitions `b*n until (b+1)*n` hold exactly batch b's salted
+    * buckets. Each batch's job then reads only its own n partitions,
+    * extracts them and commits through `sink`; the shuffle's map stage
+    * runs once and later batch jobs skip it. Trade-off: the shuffle files
+    * of the whole pending input stay on local disk until the run ends,
+    * instead of one batch's worth at a time. */
   def runBatched(spark: SparkSession, input: DataFrame, outDir: String,
                  metricsDir: String, cfg: Config = Config()): Unit =
     runBatched(spark, input, new ParquetDirSink(outDir, metricsDir), cfg)
 
   def runBatched(spark: SparkSession, input: DataFrame, sink: BatchSink,
                  cfg: Config): Unit = {
+    val pending = (0 until cfg.numBatches).filterNot(sink.isBatchCommitted)
+    if (pending.isEmpty) return
+    val n = cfg.partitions + cfg.giantBuckets
+    val batch = pmod(xxhash64(col("doc_id")), lit(cfg.numBatches)).cast("int")
+    val shuffled = exactRepartition(input.filter(batch.isin(pending: _*)),
+        batch * n + saltBucket(cfg), cfg.numBatches * n)
+      .as(Encoders.product[DocRow]).rdd
     val acc = new CollectionAccumulator[MetricsRow]
     spark.sparkContext.register(acc, "graft.metrics")
-    val withBatch = input.withColumn("__graft_batch",
-      pmod(xxhash64(col("doc_id")), lit(cfg.numBatches)).cast("int"))
-    (0 until cfg.numBatches).foreach { b =>
-      if (!sink.isBatchCommitted(b)) {
-        val batchDf = withBatch.filter(col("__graft_batch") === b).drop("__graft_batch")
-        val salted = saltedRepartitionTyped(batchDf.as[DocRow](
-          org.apache.spark.sql.Encoders.product[DocRow]), cfg)
-        sink.writeBatch(b, extractDataset(salted, cfg, b, acc))
-        // commit metrics for this batch (append — lineage survives resume)
-        val rows = scala.jdk.CollectionConverters.ListHasAsScala(acc.value).asScala.toSeq
-        sink.appendMetrics(spark, rows)
-        acc.reset()
-      }
+    pending.foreach { b =>
+      val out = PartitionPruningRDD.create(shuffled, _ / n == b)
+        .mapPartitionsWithIndex((pid, it) => extractPartition(it, cfg, b, pid, acc))
+      sink.writeBatch(b, spark.createDataset(out)(Encoders.product[DocRow]))
+      // commit metrics for this batch (append — lineage survives resume)
+      val rows = scala.jdk.CollectionConverters.ListHasAsScala(acc.value).asScala.toSeq
+      sink.appendMetrics(spark, rows)
+      acc.reset()
     }
   }
 
