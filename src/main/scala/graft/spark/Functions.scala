@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.{SparkSessionExtensions, Column}
+import scala.util.control.NonFatal
 
 /** JVM-static kernels invoked from both interpreted eval and generated
   * code (whole-stage codegen emits a direct static call — no Scala
@@ -1291,7 +1292,7 @@ object HtmlUdfs {
               // yields zero spans, never a task failure (Changes:33)
               val extracted =
                 try Extractor.extractHtml(text.toString)
-                catch { case _: Throwable => Seq.empty[graft.html.Span] }
+                catch { case NonFatal(_) => Seq.empty[graft.html.Span] }
               extracted.foreach { sp =>
                 out += InternalRow(UTF8String.fromString(sp.kind),
                   UTF8String.fromString(sp.text),
@@ -1638,7 +1639,7 @@ object MediaUdfs {
       }
       true
     }
-    val structOk = try walk(0, b.length, 0) catch { case _: Throwable => false }
+    val structOk = try walk(0, b.length, 0) catch { case NonFatal(_) => false }
     if (brand.isEmpty) BAD
     else (brand, timescale, durationMs, structOk && timescale > 0)
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import scala.util.control.NonFatal
 
 /** REAL PDF structure + text extraction over opaque binary columns —
   * the north rule's "PDF/layout parse" leg, pure public format (ISO
@@ -317,7 +318,7 @@ object PdfUdfs {
       }
       inf.end()
       out.toByteArray
-    } catch { case _: Throwable => null }
+    } catch { case NonFatal(_) => null }
 
   /** Text of one content stream: BT…ET blocks, show-text operators.
     * Hex strings route through the merged ToUnicode CMap when one

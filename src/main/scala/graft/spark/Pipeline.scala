@@ -1,9 +1,13 @@
 package graft.spark
 
 import graft.html.{ExtractConfig, Extractor}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.PartitionPruningRDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
 import java.nio.file.{Files, Paths}
@@ -179,7 +183,10 @@ object Pipeline {
     * batch atomically via the _SUCCESS marker; an Iceberg implementation
     * maps writeBatch → a snapshot-producing append tagged with the batch
     * id in the snapshot summary, and isBatchCommitted → a summary lookup
-    * — the resume loop is identical (SURVEY §4 checkpoint/resume row). */
+    * — the resume loop is identical (SURVEY §4 checkpoint/resume row).
+    * `appendMetrics` is called once per committed batch, on the driver
+    * thread, after that batch's `writeBatch` returns, with the batch's
+    * lineage rows (one per partition). */
   trait BatchSink {
     def isBatchCommitted(batchId: Int): Boolean
     def writeBatch(batchId: Int, out: Dataset[DocRow]): Unit
@@ -191,12 +198,44 @@ object Pipeline {
       Files.exists(Paths.get(s"$outDir/batch=$b/_SUCCESS"))
     def writeBatch(b: Int, out: Dataset[DocRow]): Unit =
       out.write.mode("overwrite").parquet(s"$outDir/batch=$b")
-    def appendMetrics(spark: SparkSession, rows: Seq[MetricsRow]): Unit = {
-      import spark.implicits._
-      if (rows.nonEmpty)
-        spark.createDataset(rows).write.mode("append").parquet(metricsDir)
-    }
+    def appendMetrics(spark: SparkSession, rows: Seq[MetricsRow]): Unit =
+      appendMetricsFile(spark, metricsDir, rows)
   }
+
+  private lazy val metricsSchema = Encoders.product[MetricsRow].schema
+
+  /** Appends `rows` to the parquet table at `dir` as one new file, written
+    * from the driver through the session's Hadoop FileSystem — no Spark
+    * job. The file is written under a hidden `.`-prefixed name, which
+    * Spark's file listing skips, then renamed to a unique `part-` name, so
+    * readers never see a half-written file. Parquet schema and footer
+    * metadata are the ones Spark writes for `MetricsRow`, so the table
+    * reads the same as one appended by `Dataset.write`. */
+  private[graft] def appendMetricsFile(spark: SparkSession, dir: String,
+                                       rows: Seq[MetricsRow]): Unit =
+    if (rows.nonEmpty) {
+      val parquetSchema =
+        new SparkToParquetSchemaConverter(spark.sessionState.conf).convert(metricsSchema)
+      val conf = spark.sessionState.newHadoopConf()
+      val name = s"part-${java.util.UUID.randomUUID()}.parquet"
+      val tmp = new Path(dir, s".$name")
+      val writer = ExampleParquetWriter.builder(tmp).withConf(conf).withType(parquetSchema)
+        .withExtraMetaData(java.util.Map.of(ParquetReadSupport.SPARK_METADATA_KEY, metricsSchema.json))
+        .build()
+      val groups = new SimpleGroupFactory(parquetSchema)
+      try rows.foreach { r =>
+        val g = groups.newGroup()
+        r.productIterator.zipWithIndex.foreach {
+          case (v: Int, i) => g.add(i, v)
+          case (v: Long, i) => g.add(i, v)
+          case (v: String, i) => g.add(i, v)
+          case _ => // null string: the optional field stays unset
+        }
+        writer.write(g)
+      } finally writer.close()
+      if (!tmp.getFileSystem(conf).rename(tmp, new Path(dir, name)))
+        throw new java.io.IOException(s"could not rename $tmp to $name")
+    }
 
   /** Batched, checkpoint-resumable run (north_rule). Batch membership is
     * pmod(xxhash64(doc_id), numBatches); a batch committed by an earlier

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import scala.util.control.NonFatal
 
 /** WARC (ISO 28500) record splitting + HTTP payload header extraction —
   * the crawl-archive ingestion format a web-scale extraction pipeline
@@ -64,7 +65,7 @@ object WarcUdfs {
         n = in.read(buf)
       }
       out.toByteArray
-    } catch { case _: Throwable => null }
+    } catch { case NonFatal(_) => null }
 
   private def indexOfWarc(b: Array[Byte], from: Int): Int = {
     var i = math.max(from, 0)
@@ -286,7 +287,7 @@ object WarcUdfs {
       }
       new GenericArrayData(out.toArray)
     } catch {
-      case _: Throwable => new GenericArrayData(Array.empty[Any])
+      case NonFatal(_) => new GenericArrayData(Array.empty[Any])
     }
 
   def splitRecords(blob0: Array[Byte]): ArrayData =
@@ -338,7 +339,7 @@ object WarcUdfs {
       }
       new GenericArrayData(out.toArray)
     } catch {
-      case _: Throwable => new GenericArrayData(Array.empty[Any])
+      case NonFatal(_) => new GenericArrayData(Array.empty[Any])
     }
 
   private def md5HexStr(s: String): String = {

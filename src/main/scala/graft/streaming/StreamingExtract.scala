@@ -101,10 +101,7 @@ object StreamingExtract {
         Pipeline.extractDataset(salted, cfg, batchId.toInt, acc)
           .write.mode("append").parquet(s"$outDir/data")
         val rows = scala.jdk.CollectionConverters.ListHasAsScala(acc.value).asScala.toSeq
-        if (rows.nonEmpty)
-          batch.sparkSession.createDataset(rows)
-            .write.mode("append").parquet(s"$outDir/metrics")
-        ()
+        Pipeline.appendMetricsFile(batch.sparkSession, s"$outDir/metrics", rows)
       }
     (if (availableNowOnly) writer.trigger(Trigger.AvailableNow()) else writer)
       .start()

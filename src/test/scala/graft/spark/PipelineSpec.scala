@@ -180,6 +180,80 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     Pipeline.runBatched(spark, input, outDir, metricsDir, cfg)
     assert(files() == before)
   }
+
+  test("lineage files written from the driver read back like Spark-written ones") {
+    import spark.implicits._
+    val dir = "/tmp/graft-test/metrics-compat"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val ours = Seq(
+      MetricsRow(0, 0, 3, 2, 1, 17, 4096, 12, "doc-1", "doc-9"),
+      MetricsRow(0, 1, 0, 0, 0, 0, 0, 0, "", ""))
+    val theirs = Seq(MetricsRow(1, 0, 5, 5, 0, 40, 8192, 30, "doc-2", "doc-7"),
+      MetricsRow(1, 3, 0, 0, 0, 0, 0, 1, "", ""))
+    def parts() = new java.io.File(dir).listFiles().map(_.getName)
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSet
+    Pipeline.appendMetricsFile(spark, dir, ours)
+    val ourParts = parts()
+    assert(ourParts.size == 1, ourParts)
+    spark.createDataset(theirs).write.mode("append").parquet(dir)
+    val sparkParts = parts() -- ourParts
+    Pipeline.appendMetricsFile(spark, dir, Seq.empty) // no rows: no file
+    assert(parts() == ourParts ++ sparkParts)
+    // a crash mid-write leaves a hidden partial file behind
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, ".part-crashed.parquet"),
+      "PAR1 truncated".getBytes("UTF-8"))
+
+    val back = spark.read.parquet(dir).as[MetricsRow].collect().toSeq
+    assert(back.sortBy(r => (r.batch_id, r.partition_id)) == ours ++ theirs)
+
+    def footer(name: String) = {
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(dir, name), spark.sessionState.newHadoopConf())
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getFooter.getFileMetaData finally r.close()
+    }
+    val sparkKey = org.apache.spark.sql.execution.datasources.parquet
+      .ParquetReadSupport.SPARK_METADATA_KEY
+    val mine = footer(ourParts.head)
+    sparkParts.map(footer).foreach { ref =>
+      assert(mine.getSchema == ref.getSchema)
+      assert(mine.getKeyValueMetaData.get(sparkKey) == ref.getKeyValueMetaData.get(sparkKey))
+    }
+    def readSchema(n: String) = spark.read.parquet(s"$dir/$n").schema
+    sparkParts.foreach(n => assert(readSchema(ourParts.head) == readSchema(n)))
+  }
+
+  test("batched run: one Spark job per batch plus the shared shuffle") {
+    val base = "/tmp/graft-test/job-count"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    val sc = spark.sparkContext
+    val cfg = Pipeline.Config(partitions = 4, giantBuckets = 1, numBatches = 4)
+    val input = CorpusGen.inputDs(spark, 200, parallelism = 4).toDF()
+    // fence jobs: their ids are known at submit, and the listener sees
+    // job starts in id order, so once it has seen the closing fence it
+    // has seen every job runBatched submitted (tagged by the job group)
+    val group = "graft-test-job-count"
+    def fence(): Int = sc.parallelize(Seq(0), 1).collectAsync().jobIds.head
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          started.add(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job-count pin")
+    try {
+      val from = fence()
+      Pipeline.runBatched(spark, input, s"$base/out", s"$base/metrics", cfg)
+      val to = fence()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!started.contains(to) && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(started.contains(to), "listener never saw the closing fence job")
+      val jobs = scala.jdk.CollectionConverters.CollectionHasAsScala(started).asScala
+        .count(id => id > from && id < to)
+      assert(jobs >= 4 && jobs <= 1 + 4, s"$jobs jobs for 4 batches")
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
 }
 
 /** Native Catalyst expressions (SURVEY §7.3 custom tally). */
@@ -213,6 +287,17 @@ class FunctionsSpec extends AnyFunSuite {
     assert(plan.contains("*(1) Project") && plan.contains("parse_html_text"),
       s"plan not codegen'd:\n$plan")
     assert(df.collect().map(_.getString(0)).sorted.toSeq == Seq("x0", "x1", "x2"))
+  }
+
+  test("extract_interleaved_spans: a 50k-deep div nest still yields its row") {
+    import spark.implicits._
+    val depth = 50000
+    val html = "<div>" * depth + "deep" + "</div>" * depth
+    val r = Seq(DocRow("deep", Seq(SpanRow("html", html, "", 0)))).toDF()
+      .select(GraftFunctions.extract_interleaved_spans(col("spans")).as("s"))
+      .as[Seq[SpanRow]].collect()
+    assert(r.length == 1)
+    assert(r.head.map(_.text) == Seq("deep"))
   }
 
   test("serialize_html, html_quirks_mode, prescan_charset") {

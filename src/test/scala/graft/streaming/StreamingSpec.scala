@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.spark.{CorpusGen, DocKernel, DocRow, Pipeline, SparkTestSession}
+import graft.spark.{CorpusGen, DocKernel, DocRow, MetricsRow, Pipeline, SparkTestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamingSpec extends AnyFunSuite {
@@ -36,8 +36,10 @@ class StreamingSpec extends AnyFunSuite {
         !d.doc_id.startsWith("garbage-"))
       .foreach { d => assert(d.spans == expected(d.doc_id), d.doc_id) }
 
-    // metrics landed
-    assert(spark.read.parquet(s"$base/out/metrics").count() > 0)
+    // metrics landed, and the lineage rows count every drained doc
+    val lineage = spark.read.parquet(s"$base/out/metrics").as[MetricsRow].collect()
+    assert(lineage.nonEmpty)
+    assert(lineage.map(_.docs_in).sum == out.length)
   }
 
   test("streaming WARC ingestion: drain equals the batch path; malformed blobs stay row verdicts") {
