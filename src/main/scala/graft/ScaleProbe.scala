@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** One-off scale probe (round 7, VERDICT r6 #7): run a query suite at
   * two scale factors in the SAME session and report the wall-clock
@@ -97,7 +98,7 @@ object ScaleProbe {
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[probe] $name@$dir: ${e.getMessage}") }
       (System.nanoTime() - t0) / 1e9
     }

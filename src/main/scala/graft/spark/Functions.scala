@@ -4,7 +4,7 @@ import graft.html._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
@@ -1270,12 +1270,26 @@ object HtmlUdfs {
     }
   }
 
-  /** Full interleaved-document kernel over a spans ArrayData — the
-    * columnar fast path: no Dataset object codec on either side
-    * (DocKernel semantics; text/media spans pass through without even
-    * materializing a java.lang.String). */
+  /** The one per-doc extraction kernel (`extract_interleaved_spans` and
+    * every `Pipeline` driver). html spans run the full parse (myhtml.c:
+    * 225-238), text spans pass through unless whitespace-only, media refs
+    * pass through; offsets are rebased to the document (input span offset
+    * + intra-span offset, tokenizer.c:91). A doc whose extraction throws
+    * non-fatally yields an empty span list, never a task failure. */
   def extractInterleaved(spans: ArrayData): ArrayData = {
+    val out = extractInterleavedOrNull(spans)
+    if (out == null) emptySpans else out
+  }
+
+  private[spark] val emptySpans: ArrayData = new GenericArrayData(Array.empty[Any])
+
+  /** `extractInterleaved` with a failed doc as null, so lineage can count it. */
+  private[spark] def extractInterleavedOrNull(spans: ArrayData): ArrayData = {
     interleavedEvals.incrementAndGet()
+    try interleavedSpans(spans) catch { case NonFatal(_) => null }
+  }
+
+  private def interleavedSpans(spans: ArrayData): ArrayData = {
     val n = spans.numElements()
     val out = new scala.collection.mutable.ArrayBuffer[Any](n * 4)
     var i = 0
@@ -1288,12 +1302,7 @@ object HtmlUdfs {
             val text = row.getUTF8String(1)
             if (text != null && text.numBytes() > 0) {
               val base = row.getInt(3)
-              // robustness parity with the typed path: a pathological doc
-              // yields zero spans, never a task failure (Changes:33)
-              val extracted =
-                try Extractor.extractHtml(text.toString)
-                catch { case NonFatal(_) => Seq.empty[graft.html.Span] }
-              extracted.foreach { sp =>
+              Extractor.extractHtml(text.toString).foreach { sp =>
                 out += InternalRow(UTF8String.fromString(sp.kind),
                   UTF8String.fromString(sp.text),
                   UTF8String.fromString(sp.media_ref), base + sp.offset)
@@ -1309,7 +1318,7 @@ object HtmlUdfs {
             if (ref != null && ref.numBytes() > 0)
               out += InternalRow(UTF8String.fromString("media"),
                 UTF8String.EMPTY_UTF8, ref.clone(), row.getInt(3))
-          case _ =>
+          case _ => // unknown kinds dropped (forward compat)
         }
       }
       i += 1
@@ -2683,9 +2692,13 @@ case class GraftPqLut(child: Expression, codebooks: Array[Array[Array[Float]]])
   override def prettyName: String = "graft_pq_lut"
 }
 
+/** The kernel reads the span struct by position, so its input shape is
+  * checked once, at analysis: `spanArrayType` by field name and order,
+  * nullability ignored (ExpectsInputTypes' UNEXPECTED_INPUT_TYPE). */
 case class ExtractInterleavedSpans(child: Expression)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = HtmlUdfs.spanArrayType
+  override def inputTypes: Seq[DataType] = Seq(HtmlUdfs.spanArrayType)
   override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
     HtmlUdfs.extractInterleaved(input.asInstanceOf[ArrayData])

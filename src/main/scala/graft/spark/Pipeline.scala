@@ -1,31 +1,32 @@
 package graft.spark
 
-import graft.html.{ExtractConfig, Extractor}
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.spark.TaskContext
-import org.apache.spark.rdd.PartitionPruningRDD
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSql
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.CollectionAccumulator
 import java.nio.file.{Files, Paths}
-import scala.util.control.NonFatal
 
 /** Extraction pipeline over the interleaved-document table.
   *
   * Spark realization of SURVEY §3.1: the whole reference chain
   * (tokenize → materialize → tree-build → extract; myhtml.c:225-238)
-  * runs fused inside one mapPartitions closure per row — the reference's
-  * SINGLE mode semantics (myhtml.c:130-134), with Spark tasks replacing
-  * its worker threads (X1-X6 substrate).
+  * runs fused in one `HtmlUdfs.extractInterleaved` call per row, over the
+  * shuffle's Catalyst rows — the reference's SINGLE mode semantics
+  * (myhtml.c:130-134), with Spark tasks replacing its worker threads.
   *
   * Scale design (north_rule):
   *  - explicit salted repartitioning: giant docs get dedicated buckets so
   *    a 100 MB document never straggles a partition of small docs;
-  *  - per-doc size cap: oversized docs are failed into lineage, not OOM;
-  *  - per-partition lineage rows + live counters via accumulators;
+  *  - per-doc size cap (UTF-8 bytes): oversized docs fail into lineage;
+  *  - per-partition lineage rows (docs in/ok/failed, spans, bytes);
   *  - batch loop with atomic per-batch commits (_SUCCESS marker — the
   *    parquet stand-in for Iceberg snapshot commits; on Iceberg swap the
   *    writer, the resume logic reads committed batch ids the same way);
@@ -36,10 +37,9 @@ object Pipeline {
   final case class Config(
       partitions: Int = 32,
       giantBuckets: Int = 4,
-      giantThresholdBytes: Long = 1L << 20,   // 1 MiB of payload = "giant"
-      maxDocBytes: Long = 256L << 20,         // hard cap: fail, don't parse
-      numBatches: Int = 8,
-      extract: ExtractConfig = Extractor.Strict)
+      giantThresholdBytes: Long = 1L << 20,   // 1 MiB of UTF-8 text = "giant"
+      maxDocBytes: Long = 256L << 20,         // hard cap in UTF-8 bytes: fail, don't parse
+      numBatches: Int = 8)
 
   /** For each target partition 0..n-1, the smallest non-negative int v
     * whose Spark HashPartitioning id (pmod(murmur3(v, seed=42), n)) is
@@ -67,7 +67,7 @@ object Pipeline {
   private def saltBucket(cfg: Config): Column = {
     val hash = xxhash64(col("doc_id"))
     val bytes = aggregate(col("spans"), lit(0L),
-      (acc, s) => acc + coalesce(length(s.getField("text")).cast("long"), lit(0L)))
+      (acc, s) => acc + coalesce(octet_length(s.getField("text")).cast("long"), lit(0L)))
     when(bytes > cfg.giantThresholdBytes,
         pmod(hash, lit(cfg.giantBuckets)).cast("int") + cfg.partitions)
       .otherwise(pmod(hash, lit(cfg.partitions)).cast("int"))
@@ -89,26 +89,41 @@ object Pipeline {
   def saltedRepartition(df: DataFrame, cfg: Config): DataFrame =
     exactRepartition(df, saltBucket(cfg), cfg.partitions + cfg.giantBuckets)
 
-  /** The per-partition kernel: extracts every doc of partition `pid` and
-    * pushes one MetricsRow for it into `acc` once the input is drained
-    * (north_rule lineage). Never throws per-doc: a doc over
-    * `maxDocBytes` or one whose parse fails non-fatally emits an
-    * empty-span row and counts into docs_failed (robustness, Changes:33);
-    * fatal errors (OOM, interrupts) propagate. */
-  private def extractPartition(it: Iterator[DocRow], cfg: Config, batchId: Int,
+  /** `doc_id, spans` of `df`; a `spans` of the wrong shape fails here with
+    * `extract_interleaved_spans`' own AnalysisException (analysis only). */
+  private def kernelInput(df: DataFrame): DataFrame = {
+    df.select(GraftSql.column(ExtractInterleavedSpans(GraftSql.expressionOf(col("spans")))))
+    df.select(col("doc_id"), col("spans"))
+  }
+
+  /** `df`'s Catalyst rows, taken as `Dataset.rdd` takes its rows: under a
+    * SQL execution, so query listeners and the UI see the scan and shuffle
+    * (a bare `toRdd` runs them unreported). */
+  private def catalystRows(df: DataFrame): RDD[InternalRow] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("rdd"))(qe.toRdd)
+  }
+
+  /** The per-partition driver of the kernel over `doc_id, spans` rows:
+    * extracts every doc of partition `pid` and pushes one MetricsRow for
+    * it into `acc` once the input is drained (north_rule lineage). Never
+    * throws per-doc: a doc over `maxDocBytes` is not parsed, and one whose
+    * extraction fails non-fatally comes back null from the kernel; both
+    * emit an empty-span row and count into docs_failed (robustness,
+    * Changes:33). Fatal errors (OOM, interrupts) propagate. */
+  private def extractPartition(it: Iterator[InternalRow], cfg: Config, batchId: Int,
                                pid: Int, acc: CollectionAccumulator[MetricsRow])
-      : Iterator[DocRow] = {
-    val extractCfg = cfg.extract
+      : Iterator[InternalRow] = {
     val maxBytes = cfg.maxDocBytes
-    new Iterator[DocRow] {
+    new Iterator[InternalRow] {
       private val t0 = System.nanoTime()
       private var docsIn = 0L
       private var docsOk = 0L
       private var docsFailed = 0L
       private var spansOut = 0L
       private var bytesIn = 0L
-      private var firstId: String = null
-      private var lastId: String = null
+      private var firstId: UTF8String = null
+      private var lastId: UTF8String = null
       private var finalized = false
 
       def hasNext: Boolean = {
@@ -117,67 +132,64 @@ object Pipeline {
           finalized = true
           acc.add(MetricsRow(batchId, pid, docsIn, docsOk, docsFailed,
             spansOut, bytesIn, (System.nanoTime() - t0) / 1000000L,
-            if (firstId == null) "" else firstId,
-            if (lastId == null) "" else lastId))
+            if (firstId == null) "" else firstId.toString,
+            if (lastId == null) "" else lastId.toString))
         }
         h
       }
 
-      def next(): DocRow = {
-        val doc = it.next()
+      def next(): InternalRow = {
+        val row = it.next()
+        // the shuffle and projection reuse their row buffers: keep a copy
+        val docId = if (row.isNullAt(0)) null else row.getUTF8String(0).clone()
         docsIn += 1
-        if (firstId == null) firstId = doc.doc_id
-        lastId = doc.doc_id
-        val sz = DocKernel.docBytes(doc)
+        if (firstId == null) firstId = docId
+        lastId = docId
+        val spans = if (row.isNullAt(1)) HtmlUdfs.emptySpans else row.getArray(1)
+        val sz = (0 until spans.numElements()).iterator.map(spans.getStruct(_, 4))
+          .map(s => if (s == null || s.isNullAt(1)) 0L else s.getUTF8String(1).numBytes().toLong).sum
         bytesIn += sz
-        val out =
-          if (sz > maxBytes) { docsFailed += 1; DocRow(doc.doc_id, Seq.empty) }
-          else try {
-            val r = DocKernel.extractDoc(doc, extractCfg)
-            docsOk += 1
-            r
-          } catch { case NonFatal(_) =>
-            docsFailed += 1
-            DocRow(doc.doc_id, Seq.empty)
-          }
-        spansOut += out.spans.length
-        out
+        val out = if (sz > maxBytes) null else HtmlUdfs.extractInterleavedOrNull(spans)
+        if (out == null) docsFailed += 1 else { docsOk += 1; spansOut += out.numElements() }
+        InternalRow(docId, if (out == null) HtmlUdfs.emptySpans else out)
       }
     }
   }
 
-  /** The distributed kernel: Dataset[DocRow] → Dataset[DocRow] with one
-    * MetricsRow per partition pushed into `acc` (`extractPartition`). */
-  def extractDataset(ds: Dataset[DocRow], cfg: Config, batchId: Int,
-                     acc: CollectionAccumulator[MetricsRow]): Dataset[DocRow] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions(it =>
-      extractPartition(it, cfg, batchId, TaskContext.getPartitionId(), acc))
+  private lazy val docEncoder = Encoders.product[DocRow]
+
+  /** `extractPartition` over each partition of `doc_id, spans` rows, as a
+    * Dataset of `DocRow`'s schema (the parquet schema sinks commit). */
+  private def extractRows(spark: SparkSession, rows: RDD[InternalRow], cfg: Config,
+                          batchId: Int, acc: CollectionAccumulator[MetricsRow]): Dataset[DocRow] =
+    GraftSql.createDataFrame(spark,
+      rows.mapPartitionsWithIndex((pid, it) => extractPartition(it, cfg, batchId, pid, acc)),
+      docEncoder.schema).as(docEncoder)
+
+  /** Salted repartition → kernel; metrics land in the returned accumulator,
+    * one row per partition tagged `batchId`, after an action runs. Under
+    * AQE the shuffle's map stage runs here, when its rows are taken. */
+  private[graft] def extractBatch(spark: SparkSession, input: DataFrame, cfg: Config,
+                                  batchId: Int): (Dataset[DocRow], CollectionAccumulator[MetricsRow]) = {
+    val acc = new CollectionAccumulator[MetricsRow]
+    spark.sparkContext.register(acc, s"graft.metrics.$batchId")
+    (extractRows(spark, catalystRows(saltedRepartition(kernelInput(input), cfg)),
+      cfg, batchId, acc), acc)
   }
 
-  /** Columnar fast path: the whole kernel as one native expression —
-    * scan's UnsafeArrayData flows in, spans ArrayData flows out, no
-    * Dataset object-codec hop on either side (~25% less memory traffic
-    * per row than the typed path). Use when per-partition lineage rows
-    * aren't needed (counters still available via SQL metrics). */
+  /** The kernel as a SQL expression over a salted repartition: no
+    * lineage rows and no size cap, every input column kept. Bench's
+    * `pipe_dps` times this. */
   def extractColumnar(df: DataFrame, cfg: Config): DataFrame = {
-    import org.apache.spark.sql.functions.{call_function, col}
     GraftFunctions.registerAll(df.sparkSession)
     saltedRepartition(df, cfg)
       .withColumn("spans", call_function("extract_interleaved_spans", col("spans")))
   }
 
-  /** One-shot extraction (no batching): salted repartition → kernel.
-    * Returns the output DataFrame; metrics land in the returned
-    * accumulator after an action runs. */
+  /** One-shot extraction (no batching): `extractBatch` as batch 0. */
   def extract(spark: SparkSession, input: DataFrame, cfg: Config = Config())
-      : (Dataset[DocRow], CollectionAccumulator[MetricsRow]) = {
-    import spark.implicits._
-    val acc = new CollectionAccumulator[MetricsRow]
-    spark.sparkContext.register(acc, "graft.metrics")
-    val salted = saltedRepartition(input, cfg).as[DocRow]
-    (extractDataset(salted, cfg, batchId = 0, acc), acc)
-  }
+      : (Dataset[DocRow], CollectionAccumulator[MetricsRow]) =
+    extractBatch(spark, input, cfg, batchId = 0)
 
   /** Where committed batches live. The parquet implementation commits a
     * batch atomically via the _SUCCESS marker; an Iceberg implementation
@@ -258,15 +270,13 @@ object Pipeline {
     if (pending.isEmpty) return
     val n = cfg.partitions + cfg.giantBuckets
     val batch = pmod(xxhash64(col("doc_id")), lit(cfg.numBatches)).cast("int")
-    val shuffled = exactRepartition(input.filter(batch.isin(pending: _*)),
-        batch * n + saltBucket(cfg), cfg.numBatches * n)
-      .as(Encoders.product[DocRow]).rdd
+    val shuffled = catalystRows(exactRepartition(kernelInput(input).filter(batch.isin(pending: _*)),
+        batch * n + saltBucket(cfg), cfg.numBatches * n))
     val acc = new CollectionAccumulator[MetricsRow]
     spark.sparkContext.register(acc, "graft.metrics")
     pending.foreach { b =>
-      val out = PartitionPruningRDD.create(shuffled, _ / n == b)
-        .mapPartitionsWithIndex((pid, it) => extractPartition(it, cfg, b, pid, acc))
-      sink.writeBatch(b, spark.createDataset(out)(Encoders.product[DocRow]))
+      sink.writeBatch(b,
+        extractRows(spark, PartitionPruningRDD.create(shuffled, _ / n == b), cfg, b, acc))
       // commit metrics for this batch (append — lineage survives resume)
       val rows = scala.jdk.CollectionConverters.ListHasAsScala(acc.value).asScala.toSeq
       sink.appendMetrics(spark, rows)

@@ -1,8 +1,5 @@
 package graft.spark
 
-import graft.html.{Extractor, ExtractConfig, Span, TextPrep}
-import scala.collection.mutable.ArrayBuffer
-
 /** Input row shape — BASELINE.json input_hint:
   * (doc_id string, spans array<struct<kind,text,media_ref,offset:int>>). */
 final case class SpanRow(kind: String, text: String, media_ref: String, offset: Int)
@@ -17,44 +14,8 @@ final case class MetricsRow(
     docs_ok: Long,
     docs_failed: Long,
     spans_out: Long,
-    bytes_in: Long,
+    bytes_in: Long, // UTF-8 bytes of the docs' span texts
     wall_ms: Long,
     first_doc_id: String,
     last_doc_id: String
 )
-
-/** The per-document kernel: interleaved input spans → extracted content
-  * spans. html spans run the full parse (reference myhtml_parse,
-  * myhtml.c:225-238); text spans pass through unless whitespace-only;
-  * media refs pass through in document order. Offsets are rebased to the
-  * original document: input span offset + intra-span char offset (the
-  * reference's global_offset bookkeeping, tokenizer.c:91, collapsed to
-  * addition because each span arrives whole). */
-object DocKernel {
-
-  def extractDoc(doc: DocRow, cfg: ExtractConfig = Extractor.Strict): DocRow = {
-    val out = new ArrayBuffer[SpanRow](16)
-    if (doc.spans != null) doc.spans.foreach { in =>
-      if (in != null) in.kind match {
-        case "html" =>
-          if (in.text != null && in.text.nonEmpty) {
-            Extractor.extractHtml(in.text, cfg).foreach { s =>
-              out += SpanRow(s.kind, s.text, s.media_ref, in.offset + s.offset)
-            }
-          }
-        case "text" =>
-          if (in.text != null && !TextPrep.isWhitespaceOnly(in.text))
-            out += SpanRow("text", in.text, "", in.offset)
-        case "media" =>
-          if (in.media_ref != null && in.media_ref.nonEmpty)
-            out += SpanRow("media", "", in.media_ref, in.offset)
-        case _ => // unknown kinds dropped (forward compat)
-      }
-    }
-    DocRow(doc.doc_id, out.toSeq)
-  }
-
-  def docBytes(doc: DocRow): Long =
-    if (doc.spans == null) 0L
-    else doc.spans.iterator.map(s => if (s == null || s.text == null) 0 else s.text.length.toLong).sum
-}

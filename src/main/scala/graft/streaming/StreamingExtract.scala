@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.spark.{DocRow, MetricsRow, Pipeline}
+import graft.spark.{DocRow, Pipeline}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -84,7 +84,6 @@ object StreamingExtract {
   def start(spark: SparkSession, inputDir: String, outDir: String,
             checkpointDir: String, cfg: Pipeline.Config = Pipeline.Config(),
             availableNowOnly: Boolean = false): StreamingQuery = {
-    import spark.implicits._
     val stream = spark.readStream
       .schema(docSchema)
       .option("maxFilesPerTrigger", "64")
@@ -95,11 +94,8 @@ object StreamingExtract {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // same salted repartition + kernel as the batch pipeline;
         // per-micro-batch metrics appended next to the output
-        val acc = new org.apache.spark.util.CollectionAccumulator[MetricsRow]
-        batch.sparkSession.sparkContext.register(acc, s"graft.stream.$batchId")
-        val salted = Pipeline.saltedRepartition(batch, cfg).as[DocRow]
-        Pipeline.extractDataset(salted, cfg, batchId.toInt, acc)
-          .write.mode("append").parquet(s"$outDir/data")
+        val (out, acc) = Pipeline.extractBatch(batch.sparkSession, batch, cfg, batchId.toInt)
+        out.write.mode("append").parquet(s"$outDir/data")
         val rows = scala.jdk.CollectionConverters.ListHasAsScala(acc.value).asScala.toSeq
         Pipeline.appendMetricsFile(batch.sparkSession, s"$outDir/metrics", rows)
       }

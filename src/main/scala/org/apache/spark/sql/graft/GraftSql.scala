@@ -160,6 +160,13 @@ object GraftSql {
   def expressionOf(c: org.apache.spark.sql.Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
+  /** DataFrame over Catalyst rows of `schema`, taken as they are (no codec). */
+  def createDataFrame(spark: SparkSession,
+                      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+                      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
+
   def registerAll(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     entries.foreach { case (name, clazz, builder) =>

@@ -18,6 +18,12 @@ object SparkTestSession {
     GraftFunctions.registerAll(s)
     s
   }
+
+  /** UTF-8 bytes of a doc's span texts: the unit of `maxDocBytes` and
+    * `giantThresholdBytes`, counted here independently of the pipeline. */
+  def utf8Bytes(d: DocRow): Long =
+    d.spans.iterator.map(s => if (s == null || s.text == null) 0L
+      else s.text.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong).sum
 }
 
 /** Pipeline E2E (FIXTURES.md §6 t1/t2): constructive expected spans vs
@@ -52,6 +58,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("offsets index into the reconstructed source document") {
+    import spark.implicits._
     val g = CorpusGen.genDoc(7)
     val source = {
       val sb = new StringBuilder
@@ -61,8 +68,11 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       sb.toString
     }
-    val out = DocKernel.extractDoc(DocRow(g.doc_id, g.spans))
-    out.spans.filter(s => s.kind != "media").foreach { s =>
+    val out = Seq(DocRow(g.doc_id, g.spans)).toDF()
+      .select(GraftFunctions.extract_interleaved_spans(col("spans")))
+      .as[Seq[SpanRow]].collect().head
+    assert(out.nonEmpty)
+    out.filter(s => s.kind != "media").foreach { s =>
       val at = source.indexOf(s.text.take(10), s.offset)
       assert(at == s.offset || s.text.contains(" "), // entity-encoded block rewrites
         s"offset ${s.offset} does not locate '${s.text.take(20)}'")
@@ -93,7 +103,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val byPartition = salted.as[DocRow]
       .mapPartitions { it =>
         val docs = it.toSeq
-        val giants = docs.count(d => DocKernel.docBytes(d) > 5000)
+        val giants = docs.count(d => SparkTestSession.utf8Bytes(d) > 5000)
         Iterator.single((giants, docs.length))
       }.collect()
     val giantParts = byPartition.filter(_._1 > 0)
@@ -124,6 +134,30 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // metrics accumulated across both runs cover every batch at least once
     val m = spark.read.parquet(metricsDir)
     assert(m.select("batch_id").distinct().count() == 4)
+  }
+
+  test("a committed batch has the parquet schema of a DocRow Dataset") {
+    import spark.implicits._
+    val base = "/tmp/graft-test/batch-schema"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    Pipeline.runBatched(spark, CorpusGen.inputDs(spark, 50, parallelism = 2).toDF(),
+      s"$base/out", s"$base/metrics",
+      Pipeline.Config(partitions = 2, giantBuckets = 1, numBatches = 1))
+    Seq(DocRow("d", Seq(SpanRow("text", "t", "", 0)))).toDS()
+      .write.parquet(s"$base/typed")
+    def footer(dir: String) = {
+      val part = new java.io.File(dir).listFiles()
+        .filter(f => f.getName.startsWith("part-") && f.length() > 0).head
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(part.getPath), spark.sessionState.newHadoopConf())
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getFooter.getFileMetaData finally r.close()
+    }
+    val sparkKey = org.apache.spark.sql.execution.datasources.parquet
+      .ParquetReadSupport.SPARK_METADATA_KEY
+    val (ours, typed) = (footer(s"$base/out/batch=0"), footer(s"$base/typed"))
+    assert(ours.getSchema == typed.getSchema)
+    assert(ours.getKeyValueMetaData.get(sparkKey) == typed.getKeyValueMetaData.get(sparkKey))
   }
 
   test("batched run scans each input row once, not once per batch") {
@@ -300,6 +334,27 @@ class FunctionsSpec extends AnyFunSuite {
     assert(r.head.map(_.text) == Seq("deep"))
   }
 
+  test("extract_interleaved_spans refuses a wrong input shape at analysis") {
+    import spark.implicits._
+    val shapes = Seq(
+      "'<p>x</p>'",
+      "array(named_struct('kind', 'text', 'text', 'hello'))",
+      "array(named_struct('text', 'hello', 'kind', 'text', 'media_ref', '', 'offset', 0))")
+    shapes.foreach { spans =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT extract_interleaved_spans($spans) AS s"))
+      assert(e.getMessage.contains("UNEXPECTED_INPUT_TYPE"), e.getMessage)
+      // the row pipeline runs the same check before it reads a row
+      intercept[org.apache.spark.sql.AnalysisException](
+        Pipeline.extract(spark, spark.sql(s"SELECT 'd' AS doc_id, $spans AS spans")))
+    }
+    // the checked shape itself, fields in order, passes
+    val ok = spark.sql("SELECT extract_interleaved_spans(array(named_struct(" +
+      "'kind', 'text', 'text', 'hello', 'media_ref', '', 'offset', 0))) AS s")
+      .as[Seq[SpanRow]].collect()
+    assert(ok.toSeq == Seq(Seq(SpanRow("text", "hello", "", 0))))
+  }
+
   test("serialize_html, html_quirks_mode, prescan_charset") {
     import spark.implicits._
     val r = Seq(("<p>a & b</p>", "<!DOCTYPE html><p>x"))
@@ -351,25 +406,47 @@ class GiantDocSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(m.map(_.docs_ok).sum + failed == 300)
     // failed docs still present in output with empty spans (lineage row)
     val giants = input.as[DocRow].collect()
-      .filter(d => DocKernel.docBytes(d) > 10000).map(_.doc_id).toSet
+      .filter(d => SparkTestSession.utf8Bytes(d) > 10000).map(_.doc_id).toSet
     assert(giants.nonEmpty)
     rows.filter(r => giants.contains(r.doc_id)).foreach { r =>
       assert(r.spans.isEmpty)
     }
   }
+
+  test("maxDocBytes counts UTF-8 bytes, not chars") {
+    import spark.implicits._
+    val base = "/tmp/graft-test/utf8-cap"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    // 3,000 chars each: the 2-byte doc is 6,000 UTF-8 bytes, over a
+    // 4,000-byte cap that the ASCII doc stays under
+    val docs = Seq(
+      DocRow("ascii", Seq(SpanRow("text", "a" * 3000, "", 0))),
+      DocRow("multibyte", Seq(SpanRow("text", "\u00e9" * 3000, "", 0))))
+    Pipeline.runBatched(spark, docs.toDF(), s"$base/out", s"$base/metrics",
+      Pipeline.Config(partitions = 2, giantBuckets = 1, maxDocBytes = 4000, numBatches = 1))
+    val out = Pipeline.readOutput(spark, s"$base/out").as[DocRow].collect()
+      .map(d => d.doc_id -> d.spans).toMap
+    assert(out("ascii").map(_.text) == Seq("a" * 3000))
+    assert(out("multibyte").isEmpty)
+    val m = spark.read.parquet(s"$base/metrics").as[MetricsRow].collect()
+    assert(m.map(_.docs_failed).sum == 1 && m.map(_.docs_ok).sum == 1)
+    assert(m.map(_.bytes_in).sum == 3000 + 6000)
+  }
 }
 
-/** Columnar kernel path must agree exactly with the typed path. */
+/** The row pipeline's plumbing (Catalyst rows in, kernel call, doc_id
+  * copy, DocRow-schema frame out) must agree exactly with the kernel run
+  * as the SQL expression. */
 class ColumnarKernelSpec extends org.scalatest.funsuite.AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
-  test("extractColumnar == typed extract, span for span") {
+  test("extractColumnar == row-pipeline extract, span for span") {
     import spark.implicits._
     val cfg = Pipeline.Config(partitions = 4, giantBuckets = 1)
     val input = CorpusGen.inputDs(spark, 250, parallelism = 4).toDF()
-    val (typed, _) = Pipeline.extract(spark, input, cfg)
+    val (piped, _) = Pipeline.extract(spark, input, cfg)
     val columnar = Pipeline.extractColumnar(input, cfg).as[DocRow]
-    val a = typed.collect().map(d => d.doc_id -> d.spans).toMap
+    val a = piped.collect().map(d => d.doc_id -> d.spans).toMap
     val b = columnar.collect().map(d => d.doc_id -> d.spans).toMap
     assert(a.keySet == b.keySet)
     a.foreach { case (id, spans) => assert(b(id) == spans, id) }

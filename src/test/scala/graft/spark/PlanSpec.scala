@@ -372,6 +372,29 @@ class PlanSpec extends AnyFunSuite {
       s"extract_interleaved_spans must run once per doc: $evals evals for $n docs")
   }
 
+  test("row pipeline runs the kernel once per doc under the size cap: extract and runBatched") {
+    import spark.implicits._
+    val n = 300
+    val input = CorpusGen.inputDs(spark, n, giantEvery = 50, parallelism = 4).toDF()
+    val cfg = Pipeline.Config(partitions = 4, giantBuckets = 2, numBatches = 3,
+      maxDocBytes = 10000) // generator giants (~20 KB) are capped, never parsed
+    val uncapped = input.as[DocRow].collect()
+      .count(d => SparkTestSession.utf8Bytes(d) <= cfg.maxDocBytes)
+    assert(uncapped < n, "expected some capped giants")
+
+    HtmlUdfs.interleavedEvals.set(0)
+    Pipeline.extract(spark, input, cfg)._1.write.format("noop").mode("overwrite").save()
+    assert(HtmlUdfs.interleavedEvals.get == uncapped,
+      s"extract: ${HtmlUdfs.interleavedEvals.get} evals for $uncapped uncapped docs")
+
+    val base = "/tmp/graft-test/evals-batched"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    HtmlUdfs.interleavedEvals.set(0)
+    Pipeline.runBatched(spark, input, s"$base/out", s"$base/metrics", cfg)
+    assert(HtmlUdfs.interleavedEvals.get == uncapped,
+      s"runBatched: ${HtmlUdfs.interleavedEvals.get} evals for $uncapped uncapped docs")
+  }
+
   test("ANN top-k plan has no window rank — bounded aggregate only") {
     // the old row_number().over(Window) shuffled every (query, corpus)
     // score; the bounded aggregator keeps |Q|·k rows on the wire

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.spark.{CorpusGen, DocKernel, DocRow, MetricsRow, Pipeline, SparkTestSession}
+import graft.spark.{CorpusGen, DocRow, MetricsRow, Pipeline, SparkTestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamingSpec extends AnyFunSuite {
@@ -27,11 +27,11 @@ class StreamingSpec extends AnyFunSuite {
     val out = spark.read.parquet(s"$base/out/data").as[DocRow].collect()
     assert(out.length == 180, "checkpoint must process new files exactly once")
 
-    // content equality vs the batch kernel for the first corpus (the
-    // seed-7 landing reuses ids 0-59, so compare only unique ids)
+    // content equality vs the constructive expected spans for the first
+    // corpus (the seed-7 landing reuses ids 0-59, so compare only unique ids)
     val unique = out.groupBy(_.doc_id).filter(_._2.length == 1).keySet
-    val expected = CorpusGen.inputDs(spark, 120, parallelism = 4).collect()
-      .map(d => d.doc_id -> DocKernel.extractDoc(d).spans).toMap
+    val expected = CorpusGen.expectedDf(spark, 120, parallelism = 4).as[DocRow].collect()
+      .map(d => d.doc_id -> d.spans).toMap
     out.filter(d => unique.contains(d.doc_id) && expected.contains(d.doc_id) &&
         !d.doc_id.startsWith("garbage-"))
       .foreach { d => assert(d.spans == expected(d.doc_id), d.doc_id) }
